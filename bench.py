@@ -132,6 +132,8 @@ def compact_payload(
             else None
         )
 
+    canary_mm = canary_min_max(canary)
+    canary_pre_mm = canary_min_max(canary_pre)
     return {
         "metric": "headline_query_total",
         "value": round(total, 3),
@@ -150,8 +152,8 @@ def compact_payload(
         "methodology": METHODOLOGY,
         "materialization": "noop",
         "timing": TIMING_LABEL,
-        "noise_canary": canary_min_max(canary),
-        "noise_canary_pre": canary_min_max(canary_pre),
+        "noise_canary": canary_mm,
+        "noise_canary_pre": canary_pre_mm,
         # r16 (additive, VERDICT r15 item 7): the canary FLOOR — the
         # best the host could do on the fixed canary query across both
         # canary passes — as one machine-readable number, so cross-round
@@ -159,12 +161,8 @@ def compact_payload(
         # (r15's 11 "regressed" queries tracked a 0.26 -> 0.343 floor
         # shift) instead of by narrative. Timing methodology unchanged.
         "canary_floor": (
-            min(
-                x["min"]
-                for x in (canary_min_max(canary), canary_min_max(canary_pre))
-                if x
-            )
-            if (canary or canary_pre)
+            min(x["min"] for x in (canary_mm, canary_pre_mm) if x)
+            if (canary_mm or canary_pre_mm)
             else None
         ),
         # raw per-query samples + full canary arrays

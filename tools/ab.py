@@ -1,0 +1,167 @@
+"""Sample-interleaved A/B of the end-to-end benchmark: a git revision
+(the base) against the working tree (the change).
+
+    python tools/ab.py --workload search --seeds 11-20 [--base HEAD]
+        [--trace 0] [--json runs.json]
+
+The base revision's committed files are exported with ``git archive``
+into a fresh temporary directory (under ``$TMPDIR``, default /tmp), so
+the base leg runs exactly what a clean checkout of that revision holds.
+Each seed is one pair: both legs run ``e2ebench/run.py`` with that seed,
+one after the other, for the ``run_seconds`` that BENCHMARK.json sets,
+and the leg that runs first alternates from pair to pair so host drift
+within a pair falls on both sides equally.
+
+Prints every run, then per metric and side the median and quartiles,
+the pairs the change won (ties count for neither side) and whether the
+gain rule holds: the change wins at least nine tenths of the pairs and
+the medians differ by more than the base's interquartile range. Which
+direction is better comes from BENCHMARK.json. Exit status is non-zero
+when any run fails its output checks.
+"""
+
+from __future__ import annotations
+
+import argparse
+import json
+import os
+import shutil
+import subprocess
+import sys
+import tempfile
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.join(ROOT, "e2ebench"))
+
+from stats import median, quantile  # noqa: E402
+
+LEGS = ("base", "change")
+
+
+def _seeds(spec: str) -> list[int]:
+    """``11-20`` or ``1,5,9`` (or a mix) to a list of seeds."""
+    out = []
+    for part in spec.split(","):
+        lo, _, hi = part.partition("-")
+        out.extend(range(int(lo), int(hi or lo) + 1))
+    return out
+
+
+def export_revision(rev: str, dest: str) -> None:
+    """Write the committed files of ``rev`` into the empty ``dest``."""
+    archive = subprocess.run(
+        ["git", "-C", ROOT, "archive", "--format=tar", rev],
+        check=True, capture_output=True,
+    ).stdout
+    subprocess.run(["tar", "-x", "-C", dest], input=archive, check=True)
+
+
+def run_leg(tree: str, workload: str, seed: int, seconds: float,
+            trace: int) -> dict:
+    """One benchmark run in ``tree``; its final JSON line, or a failed
+    record when the run printed none."""
+    proc = subprocess.run(
+        [sys.executable, "e2ebench/run.py", "--workload", workload,
+         "--seed", str(seed), "--seconds", str(seconds),
+         "--trace", str(trace)],
+        cwd=tree, capture_output=True, text=True,
+    )
+    lines = proc.stdout.strip().splitlines()
+    try:
+        return json.loads(lines[-1])
+    except (IndexError, json.JSONDecodeError):
+        sys.stderr.write(proc.stderr[-2000:])
+        return {"correct": False, "failed": -1, "metrics": {}}
+
+
+def benchmark() -> tuple[float, dict[str, str]]:
+    """BENCHMARK.json's run length and, per metric, which direction is
+    better."""
+    with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
+        bench = json.load(f)
+    better = {m["name"]: m["better"]
+              for m in bench["end_to_end"] + bench["per_layer"]}
+    return bench["run_seconds"], better
+
+
+def summarize(pairs: list[dict], better: dict[str, str]) -> list[str]:
+    """Per metric: each side's median and quartiles, the pairs the change
+    won and whether the gain rule holds."""
+    names = sorted(set().union(
+        *(p[leg]["metrics"] for p in pairs for leg in LEGS)))
+    rows = [f"{'metric':36s} {'side':6s} {'q1':>10s} {'median':>10s} "
+            f"{'q3':>10s}  won  gain"]
+    for name in names:
+        vals = {leg: [p[leg]["metrics"][name]["value"] for p in pairs
+                      if name in p[leg]["metrics"]] for leg in LEGS}
+        if not all(vals.values()):
+            continue
+        sign = -1 if better.get(name, "lower") == "lower" else 1
+        won = sum(
+            sign * (p["change"]["metrics"][name]["value"]
+                    - p["base"]["metrics"][name]["value"]) > 0
+            for p in pairs
+            if all(name in p[leg]["metrics"] for leg in LEGS)
+        )
+        base_iqr = quantile(vals["base"], 0.75) - quantile(vals["base"], 0.25)
+        gain = (won >= 0.9 * len(pairs)
+                and sign * (median(vals["change"]) - median(vals["base"]))
+                > base_iqr)
+        for leg in LEGS:
+            v = vals[leg]
+            tail = (f"  {won:2d}/{len(pairs)}  {'yes' if gain else 'no'}"
+                    if leg == "change" else "")
+            rows.append(f"{name:36s} {leg:6s} {quantile(v, 0.25):10.4g} "
+                        f"{median(v):10.4g} {quantile(v, 0.75):10.4g}{tail}")
+    return rows
+
+
+def main(argv=None) -> int:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    ap.add_argument("--workload", required=True)
+    ap.add_argument("--seeds", required=True,
+                    help="one pair per seed: '11-20' or '1,5,9'")
+    ap.add_argument("--base", default="HEAD", help="git revision")
+    ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
+    ap.add_argument("--json", help="write every run's record here")
+    args = ap.parse_args(argv)
+    seconds, better = benchmark()
+
+    base_tree = tempfile.mkdtemp(prefix="ab_base_")
+    pairs = []
+    try:
+        export_revision(args.base, base_tree)
+        trees = {"base": base_tree, "change": ROOT}
+        for i, seed in enumerate(_seeds(args.seeds)):
+            order = LEGS if i % 2 == 0 else LEGS[::-1]
+            pair = {"seed": seed, "first": order[0]}
+            for leg in order:
+                pair[leg] = run_leg(trees[leg], args.workload, seed,
+                                    seconds, args.trace)
+            pairs.append(pair)
+            print(f"# pair {i + 1} seed={seed} first={order[0]} "
+                  + " ".join(
+                      f"{leg}:correct={pair[leg]['correct']},"
+                      f"failed={pair[leg]['failed']}" for leg in LEGS),
+                  flush=True)
+            for name in sorted(pair["base"]["metrics"]):
+                b = pair["base"]["metrics"][name]["value"]
+                c = pair["change"]["metrics"].get(name, {}).get("value")
+                print(f"#   {name:36s} base={b:<12.6g} change="
+                      + ("-" if c is None else f"{c:.6g}"))
+    finally:
+        shutil.rmtree(base_tree, ignore_errors=True)
+    if args.json:
+        with open(args.json, "w") as f:
+            json.dump({"workload": args.workload, "base": args.base,
+                       "seconds": seconds, "trace": args.trace,
+                       "pairs": pairs}, f, indent=1)
+    print("\n".join(summarize(pairs, better)))
+    ok = all(p[leg]["correct"] and p[leg]["failed"] == 0
+             for p in pairs for leg in LEGS)
+    print(f"# all runs correct with 0 failed: {ok}")
+    return 0 if ok else 1
+
+
+if __name__ == "__main__":
+    sys.exit(main())

@@ -11,12 +11,16 @@ from __future__ import annotations
 
 import hashlib
 import json
+import os
 import sys
+import tempfile
 import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(
+    0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+)
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
@@ -175,7 +179,9 @@ def main():
             else:
                 print(f"  cols spark={sorted(scols)} oracle={sorted(ocols)}")
 
-    with open("/tmp/correctness_local.json", "w") as f:
+    with open(
+        os.path.join(tempfile.gettempdir(), "correctness_local.json"), "w"
+    ) as f:
         json.dump(results, f, indent=1)
     n_match = sum(1 for r in results.values() if r["status"] == "MATCH")
     n_rows_only = sum(1 for r in results.values() if r["status"] == "rows_only")
