@@ -82,9 +82,11 @@ def geo_normalize(lat_raw: Column, lon_raw: Column) -> dict[str, Column]:
     elimination skips CaseWhen branch contexts), so pipeline call sites
     should use ``with_geo_normalize`` — the staged form that parses each
     coordinate ONCE into an explicit column (r15 A/B on the 600k-row
-    enrichment frame: 1.53 s -> 0.94 s for the geo+flags+shift subtree,
-    tools/probe_geo_staged.py). This form stays for single-reference
-    expression contexts and as the semantics anchor.
+    enrichment frame: 1.53 s -> 0.94 s for the geo+flags+shift subtree;
+    3.02 s -> 1.82 s and 238 -> 2 parse sites on the whole
+    etl_enrichment_pipeline, OPTIMIZATION_r15.md §6). This form stays
+    for single-reference expression contexts and as the semantics
+    anchor.
     """
     # py_double, not a bare try_cast (r12): the reference's float() call
     # (conversions.py:454-455) accepts unicode Nd digits and rejects

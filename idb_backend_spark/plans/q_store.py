@@ -290,9 +290,10 @@ def _etl_oracle_sql() -> str:
 def _etl_raw_frame(spark, sf_dir):
     """The etl pipeline's shared input stage: synthesized verbatim
     projection over the spread lineitem scan, staged geo normalization,
-    and the Molodensky shift. Factored out (r16) so the staged-flags A/B
-    probe (tools/probe_etl_flags_staged.py) builds the r15 form over the
-    identical input subtree."""
+    and the Molodensky shift. Kept apart from the value and flags stages
+    so an A/B of those stages runs over the identical input subtree (the
+    staged flags cut the optimized etl plan from 45 to 9 ``Contains(``
+    and 14 to 2 ``try_to_date``: OPTIMIZATION_r16.md §1)."""
     # the enrichment stack costs ~10x its scan bytes; a narrow scan
     # strands every other core on the whole row-wise pipeline
     # (guarded: no exchange when the scan is wide)

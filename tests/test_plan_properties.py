@@ -708,7 +708,7 @@ def test_staged_geo_normalize_parses_each_coordinate_once(spark):
     coordinate). Pinned on the optimized logical plan because the
     regression mode is expression duplication, not a physical-shape
     change (controlled A/B: 3.02 s -> 1.82 s on the sf0.1 bench frame,
-    tools/probe_geo_staged.py)."""
+    OPTIMIZATION_r15.md §6)."""
     from idb_backend_spark.functions.enrichment import with_geo_normalize
 
     cust = spark.read.parquet(f"{SF}/customer.parquet").select(
@@ -739,33 +739,55 @@ def test_staged_geo_normalize_parses_each_coordinate_once(spark):
 
 
 def test_etl_flag_kernels_evaluate_once(spark):
-    """r16: the etl flags/dqs subtree must evaluate each expensive
-    kernel exactly once per row. Two changes pin here: (a) fold_flags
-    rebuilds flag_when columns as ``when(cond, array(name))`` instead of
-    ``when(c.isNotNull(), array(c))`` — the latter evaluated every flag
-    condition twice (CaseWhen branch contexts defeat codegen CSE); (b)
-    the etl call site derives the bor/rank/date flag conditions from the
-    STAGED value columns (bor_flags_from_staged /
-    taxon_rank_flags_from_staged) instead of re-inlining the kernels.
-    Before: 5 evaluations of the 9-rule BOR contains-chain, 7 of the
-    date_fallback tree, 9 probes of the 313-literal rank map in the
-    optimized etl plan. After: exactly one BOR chain, one date tree
-    (2 try_to_date after constant folding of the absent day/sdoy arms),
-    3 literal-map probes (rank value + license + media alias)."""
+    """The etl flags/dqs subtree evaluates each expensive kernel once
+    per row: fold_flags builds flag_when columns as ``when(cond,
+    array(name))``, not ``when(c.isNotNull(), array(c))``, which
+    evaluates every condition twice (CaseWhen branch contexts defeat
+    codegen CSE), and the bor/rank/date flag conditions read the STAGED
+    value columns instead of re-inlining the kernels. Before both: 5
+    BOR contains-chains, 7 date_fallback trees and 9 probes of the
+    313-literal rank vocabulary. Now: one chain, one tree and 3 probes
+    (the value column's create_map lookup and in-mapping isin, and the
+    replaced-flag's isin over the staged ``__rank_v``). Each unit is
+    counted on its kernel alone, so a unit of 0 (a Spark rename of the
+    marker) fails instead of matching 0 == 0."""
+    from idb_backend_spark.data.taxon_ranks import MAPPING
+    from idb_backend_spark.functions import enrichment as E
     from idb_backend_spark.plans.catalog import Q
 
-    df = Q["etl_enrichment_pipeline"](spark, SF)
-    optimized = df._jdf.queryExecution().optimizedPlan().toString()
-    # one evaluation of the 9-rule BOR contains-chain
-    assert optimized.count("Contains(") == 9
-    # one date_fallback tree (2 try_to_date: month-first + bare-year
-    # arms; the day/startdayofyear arms constant-fold on lit(None))
-    assert optimized.count("try_to_date") == 2
-    # the 313-literal rank vocabulary appears exactly 3 times: the value
-    # column's create_map probe + its in_mapping isin guard, and the
-    # replaced-flag's isin over the staged __rank_v (a hash-set probe,
-    # not a map scan). Before the staged split: 9.
-    assert optimized.count("aberration") == 3
+    # nullable columns over spark.range: literal rows or non-null
+    # inputs would let the optimizer fold the kernels' branches away
+    nullable = F.when(F.col("id") > 0, F.col("id").cast("string"))
+    one = spark.range(1).select(
+        *(nullable.alias(c) for c in ("bor_s", "rank_s", "year_s", "month_s")),
+        nullable.try_cast("timestamp_ntz").alias("eventdate"),
+    )
+
+    def plan(df) -> str:
+        return df._jdf.queryExecution().optimizedPlan().toString()
+
+    def alone(kernel, needle: str) -> int:
+        # aliased: an unnamed column's name is its expression text
+        return plan(one.select(kernel.alias("k"))).count(needle)
+
+    # the BOR contains-chain (one Contains per rule needle)
+    bor_chain = alone(E.fix_basis_of_record(F.col("bor_s"))["value"],
+                      "Contains(")
+    # the date_fallback tree with etl's arguments (the day/startdayofyear
+    # arms constant-fold on lit(None))
+    date_tree = alone(E.date_fallback(F.col("eventdate"), F.col("year_s"),
+                                      F.col("month_s"), F.lit(None),
+                                      F.lit(None)), "try_to_date")
+    # one probe of the rank vocabulary; the value kernel holds two
+    rank_probe = alone(F.col("rank_s").isin(list(MAPPING)), "aberration")
+    assert min(bor_chain, date_tree, rank_probe) > 0
+    assert alone(E.fix_taxon_rank(F.col("rank_s"))["value"],
+                 "aberration") == 2 * rank_probe
+
+    etl = plan(Q["etl_enrichment_pipeline"](spark, SF))
+    assert etl.count("Contains(") == bor_chain
+    assert etl.count("try_to_date") == date_tree
+    assert etl.count("aberration") == 3 * rank_probe
 
 
 def test_pushdown_barrier_keeps_quality_gate_above_spread():

@@ -1,23 +1,30 @@
-"""Sample-interleaved A/B of the end-to-end benchmark: a git revision
-(the base) against the working tree (the change).
+"""Sample-interleaved A/B of a git revision (the base) against the
+working tree (the change) on the end-to-end or the catalog benchmark.
 
     python tools/ab.py --workload search --seeds 11-20 [--base HEAD]
         [--trace 0] [--json runs.json]
+    python tools/ab.py --workload catalog --seeds 1-10 [--base HEAD]
 
-The base revision's committed files are exported with ``git archive``
-into a fresh temporary directory (under ``$TMPDIR``, default /tmp), so
-the base leg runs exactly what a clean checkout of that revision holds.
-Each seed is one pair: both legs run ``e2ebench/run.py`` with that seed,
-one after the other, for the ``run_seconds`` that BENCHMARK.json sets,
-and the leg that runs first alternates from pair to pair so host drift
-within a pair falls on both sides equally.
+Both legs run from snapshots under ``$TMPDIR`` (default /tmp), so
+neither writes into the checkout: ``git archive`` of the base revision,
+and a copy of the working tree's tracked and untracked, not ignored
+files. Each seed is one pair: both legs run one after the other, and
+the leg that runs first alternates from pair to pair so host drift
+within a pair falls on both sides equally. A leg runs
+``e2ebench/run.py`` with the pair's seed for BENCHMARK.json's
+``run_seconds``; a ``catalog`` leg runs ``bench.py`` instead and reads
+the per-query min-of-3 seconds from the snapshot's ``BENCH_LOCAL.json``
+(``bench.py`` takes no seed, so the seeds only count the pairs, and
+``--trace`` does not apply). A catalog pair is correct only when no
+query failed and the per-query row counts agree.
 
 Prints every run, then per metric and side the median and quartiles,
 the pairs the change won (ties count for neither side) and whether the
 gain rule holds: the change wins at least nine tenths of the pairs and
 the medians differ by more than the base's interquartile range. Which
-direction is better comes from BENCHMARK.json. Exit status is non-zero
-when any run fails its output checks.
+direction is better comes from BENCHMARK.json; any other metric (a
+catalog query's seconds) counts lower as better. Exit status is non-zero
+when any pair is not correct.
 """
 
 from __future__ import annotations
@@ -56,10 +63,67 @@ def export_revision(rev: str, dest: str) -> None:
     subprocess.run(["tar", "-x", "-C", dest], input=archive, check=True)
 
 
+def export_worktree(dest: str, repo: str = ROOT) -> None:
+    """Copy the working tree of ``repo`` into the empty ``dest``: tracked
+    files as they are on disk plus untracked ones that are not ignored."""
+    names = subprocess.run(
+        ["git", "-C", repo, "ls-files", "-co", "--exclude-standard", "-z"],
+        check=True, capture_output=True, text=True,
+    ).stdout.split("\0")
+    for name in filter(None, names):
+        src, out = os.path.join(repo, name), os.path.join(dest, name)
+        if not os.path.lexists(src):  # tracked but deleted on disk
+            continue
+        os.makedirs(os.path.dirname(out), exist_ok=True)
+        shutil.copy2(src, out, follow_symlinks=False)
+
+
+def catalog_record(payload: dict | None) -> dict:
+    """``bench.py``'s full payload as a leg record: each query's min-of-3
+    seconds is a metric, and a failed query (or no payload) fails the
+    leg."""
+    if payload is None:
+        return {"correct": False, "failed": -1, "metrics": {}, "rows": {}}
+    failed = payload["failed"]
+    return {
+        "correct": not failed,
+        "failed": len(failed),
+        "metrics": {q: {"value": s, "unit": "s"}
+                    for q, s in payload["queries"].items() if s is not None},
+        "rows": payload["rows"],
+    }
+
+
+def pair_correct(pair: dict) -> bool:
+    """Both legs passed their checks and, where the legs report result
+    row counts (the catalog), the counts agree."""
+    return (all(pair[leg]["correct"] and pair[leg]["failed"] == 0
+                for leg in LEGS)
+            and pair["base"].get("rows") == pair["change"].get("rows"))
+
+
+def run_catalog_leg(tree: str) -> dict:
+    """One ``bench.py`` run in ``tree``, read back from the payload it
+    writes there."""
+    detail = os.path.join(tree, "BENCH_LOCAL.json")
+    if os.path.exists(detail):  # the snapshot's copy is a past run's
+        os.remove(detail)
+    proc = subprocess.run([sys.executable, "bench.py"], cwd=tree,
+                          capture_output=True, text=True)
+    try:
+        with open(detail) as f:
+            return catalog_record(json.load(f))
+    except (OSError, json.JSONDecodeError):
+        sys.stderr.write(proc.stderr[-2000:])
+        return catalog_record(None)
+
+
 def run_leg(tree: str, workload: str, seed: int, seconds: float,
             trace: int) -> dict:
     """One benchmark run in ``tree``; its final JSON line, or a failed
     record when the run printed none."""
+    if workload == "catalog":
+        return run_catalog_leg(tree)
     proc = subprocess.run(
         [sys.executable, "e2ebench/run.py", "--workload", workload,
          "--seed", str(seed), "--seconds", str(seconds),
@@ -127,22 +191,26 @@ def main(argv=None) -> int:
     args = ap.parse_args(argv)
     seconds, better = benchmark()
 
-    base_tree = tempfile.mkdtemp(prefix="ab_base_")
+    catalog = args.workload == "catalog"
+    trees = {leg: tempfile.mkdtemp(prefix=f"ab_{leg}_") for leg in LEGS}
     pairs = []
     try:
-        export_revision(args.base, base_tree)
-        trees = {"base": base_tree, "change": ROOT}
+        export_revision(args.base, trees["base"])
+        export_worktree(trees["change"])
         for i, seed in enumerate(_seeds(args.seeds)):
             order = LEGS if i % 2 == 0 else LEGS[::-1]
             pair = {"seed": seed, "first": order[0]}
             for leg in order:
                 pair[leg] = run_leg(trees[leg], args.workload, seed,
                                     seconds, args.trace)
+            pair["correct"] = pair_correct(pair)
             pairs.append(pair)
+            rows_equal = pair["base"].get("rows") == pair["change"].get("rows")
             print(f"# pair {i + 1} seed={seed} first={order[0]} "
                   + " ".join(
                       f"{leg}:correct={pair[leg]['correct']},"
-                      f"failed={pair[leg]['failed']}" for leg in LEGS),
+                      f"failed={pair[leg]['failed']}" for leg in LEGS)
+                  + (f" rows_equal={rows_equal}" if catalog else ""),
                   flush=True)
             for name in sorted(pair["base"]["metrics"]):
                 b = pair["base"]["metrics"][name]["value"]
@@ -150,16 +218,17 @@ def main(argv=None) -> int:
                 print(f"#   {name:36s} base={b:<12.6g} change="
                       + ("-" if c is None else f"{c:.6g}"))
     finally:
-        shutil.rmtree(base_tree, ignore_errors=True)
+        for tree in trees.values():
+            shutil.rmtree(tree, ignore_errors=True)
     if args.json:
         with open(args.json, "w") as f:
             json.dump({"workload": args.workload, "base": args.base,
                        "seconds": seconds, "trace": args.trace,
                        "pairs": pairs}, f, indent=1)
     print("\n".join(summarize(pairs, better)))
-    ok = all(p[leg]["correct"] and p[leg]["failed"] == 0
-             for p in pairs for leg in LEGS)
-    print(f"# all runs correct with 0 failed: {ok}")
+    ok = all(p["correct"] for p in pairs)
+    print("# every pair correct (both legs correct with 0 failed"
+          + (", equal rows" if catalog else "") + f"): {ok}")
     return 0 if ok else 1
 
 
